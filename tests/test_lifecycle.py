@@ -1,8 +1,9 @@
 """Background-thread ownership/close contract (r12 verdict #1/#3).
 
-The engine runs five background thread families: the cursor flusher
+The engine runs four background thread families: the cursor flusher
 and fsync worker and maintenance daemon (WalrusLog), and the group
-committer and GET read-ahead prefetch (wire plane). The reference owns
+committer (wire plane); the GET read-ahead runs on the connection
+threads and starts none of its own. The reference owns
 every worker inside a runtime it shuts down (client.rs:28-62;
 src/wal/runtime/background.rs:22-199); the analog invariant here, now
 pinned once for ALL families instead of per-instance fixes:
@@ -106,9 +107,8 @@ def test_close_quiesces_thread_family(spark, tmp_path, family):
                 shell._group_committer()
             return
 
-        # prefetch: one GET on a small topic fills the buffer below
-        # half of READAHEAD_ENTRIES, so a background prefetch (a REAL
-        # Spark peek on a daemon thread) is outstanding immediately
+        # prefetch: one GET on a small topic fills the read-ahead
+        # buffer
         log.multi_append({"t": [f"e{i}".encode() for i in range(40)]})
         c = CommandClient(host, port)
         try:
@@ -116,16 +116,9 @@ def test_close_quiesces_thread_family(spark, tmp_path, family):
         finally:
             c.close()
         ra = shell._readahead["t"]
-        pft = ra._pf_thread
-        assert ra._prefetch is not None and pft is not None
         server.shutdown()
-        # the outstanding prefetch was JOINED inside close — its Spark
-        # action completed before shutdown returned (the r12 race:
-        # an un-joined prefetch ran into spark.stop() and its ~500
-        # task-rejection errors clobbered the driver bench capture)
-        assert not pft.is_alive()
-        assert ra._closed and ra._prefetch is None and ra._pf_thread is None
-        # no Spark job can start through the plane after close
+        assert ra._closed
+        # no read can start through the plane after close
         with pytest.raises(RuntimeError, match="shutting down"):
             ra.get_next()
         with pytest.raises(RuntimeError, match="shutting down"):
@@ -174,48 +167,6 @@ def test_sidecar_straggler_racing_close_syncs_inline(
     assert not log._fsync_dirty  # nothing left rename-visible-unsynced
 
 
-def test_close_reports_wedged_prefetch(spark, tmp_path):
-    """r13 verdict #3: a prefetch whose Spark action wedges past the
-    join timeout must be REPORTED by close() — job group cancelled and
-    a RuntimeWarning naming the survivor — never silently left alive
-    (that would resurrect exactly the spark.stop() race the close
-    contract exists to prevent). close() itself still returns."""
-    from walrus_spark.log.commands import _TopicReadAhead
-
-    log = WalrusLog(spark, str(tmp_path / "wedge"))
-    try:
-        log.multi_append({"t": [b"a", b"b"]})
-        ra = _TopicReadAhead(log, "t")
-        entered = threading.Event()
-        release = threading.Event()
-        real_peek = log.peek_range
-
-        def slow_peek(*a, **k):
-            entered.set()
-            release.wait(timeout=30)
-            return real_peek(*a, **k)
-
-        log.peek_range = slow_peek
-        try:
-            with ra.lock:
-                ra._spawn_prefetch(0)
-            pft = ra._pf_thread
-            assert pft is not None and entered.wait(timeout=10)
-            ra.JOIN_TIMEOUT = 0.2  # instance attr shadows the bound
-            with pytest.warns(RuntimeWarning, match="still alive"):
-                ra.close()
-            assert ra._closed and ra._pf_thread is None
-        finally:
-            release.set()
-            log.peek_range = real_peek
-        pft.join(timeout=10)
-        assert not pft.is_alive()
-        # the happy path stays warning-free: a second close is a no-op
-        ra.close()
-    finally:
-        log.close()
-
-
 def test_close_reports_wedged_committer(spark, tmp_path):
     """Same contract for the write-side drain: a commit wedged past
     the join bound makes close() warn loudly instead of returning as
@@ -260,8 +211,9 @@ def test_close_reports_wedged_committer(spark, tmp_path):
 
 def test_get_to_half_drain_then_shutdown_no_thread_survives(spark, tmp_path):
     """The r12 verdict-#1 'done' scenario verbatim: serve GETs to
-    half-drain (prefetch outstanding mid-serve), shut the server down,
-    and assert zero wire threads survive and no job starts after."""
+    half-drain, shut the server down, and assert zero wire threads
+    survive and no job starts after."""
+    before = set(threading.enumerate())
     log = WalrusLog(spark, str(tmp_path / "halfdrain"))
     server = CommandServer(log)
     host, port = server.start_background()
@@ -275,12 +227,14 @@ def test_get_to_half_drain_then_shutdown_no_thread_survives(spark, tmp_path):
         finally:
             c.close()
         ra = server.shell._readahead["g"]
-        threads = [t for t in (ra._pf_thread,) if t is not None]
         server.shutdown()
-        assert all(_drain_threads(threads, timeout=0.0)) or all(
-            not t.is_alive() for t in threads
-        )
         assert ra._closed
+        wire = [
+            t
+            for t in threading.enumerate()
+            if t not in before and t not in (log._cfl_thread, log._fsync_thread)
+        ]
+        assert all(_drain_threads(wire)), wire
         # delivered entries stayed exactly-once and durable: the
         # committed cursor survives a fresh instance
         log2 = WalrusLog(spark, str(tmp_path / "halfdrain"))

@@ -3425,5 +3425,9 @@ def test_doc_entry_spread_is_layout_invariant(spark, tmp_path):
         QUERIES["pipeline_decontamination"](spark, str(many))
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "RoundRobinPartitioning" in plan_a, plan_a
+    # with one core there is nothing to spread to, so spread() no-ops
+    # on the single-split arm too; the multiset check above holds at
+    # every parallelism
+    if spark.sparkContext.defaultParallelism >= 2:
+        assert "RoundRobinPartitioning" in plan_a, plan_a
     assert "RoundRobinPartitioning" not in plan_b, plan_b

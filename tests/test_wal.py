@@ -1780,7 +1780,8 @@ def test_xxhash64_python_matches_spark(spark):
     """The driver-side append path stamps crc with a pure-python XXH64;
     Spark's xxhash64 verifies it on EVERY delivery — so the two must be
     bit-identical across every length class of the algorithm (empty,
-    <4, 4-7, 8-31, exactly 32, >32, large, all-byte-values)."""
+    <4, 4-7, 8-31, exactly 32, >32, stripe multiples ±1, large,
+    all-byte-values)."""
     import random
 
     import pyspark.sql.functions as F
@@ -1791,6 +1792,11 @@ def test_xxhash64_python_matches_spark(spark):
     payloads = [b"", b"a", b"ab", b"abc", b"abcd", b"abcdefg",
                 b"x" * 8, b"x" * 31, b"x" * 32, b"x" * 33,
                 bytes(range(256)), b"\x00" * 100, b"\xff" * 1000]
+    # stripe and tail boundaries of the unrolled stripe loop
+    payloads += [
+        bytes(rnd.getrandbits(8) for _ in range(k))
+        for k in (63, 64, 65, 64 * 1024 + 7)
+    ]
     payloads += [
         bytes(rnd.getrandbits(8) for _ in range(rnd.randrange(0, 5000)))
         for _ in range(40)
@@ -1906,6 +1912,258 @@ def test_peek_range_detects_corruption(spark, tmp_path):
         )
     with pytest.raises(ChecksumError, match="checksum mismatch"):
         log.peek_range("t", 0, max_entries=10)
+    log.close()
+
+
+def test_window_reads_inside_compacted_layout(spark, tmp_path):
+    """peek_range and batch_read(start_offset=...) read a compacted
+    record (one file set rewritten by (topic, segment)) exactly as they
+    read the batches it replaced — for topic names that are numeric or
+    carry spaces, '=' and '/', for windows that cross segments
+    (max_segment_entries=4), and for windows that straddle the
+    compacted record and a batch committed after it."""
+    import glob
+
+    log = WalrusLog(spark, str(tmp_path / "cmpwin"), max_segment_entries=4)
+    topics = ["7", "a b", "x=y/z"]
+
+    def payload(t, k, i):
+        return f"{t}|{k}.{i}".encode() * (1 + i % 3)
+
+    for k in range(3):  # offsets 5k+1 .. 5k+5 per topic
+        log.multi_append(
+            {t: [payload(t, k, i) for i in range(5)] for t in topics}
+        )
+    windows = [  # (start_offset, max_entries, max_bytes)
+        (0, 3, 10**9),
+        (2, 6, 10**9),
+        (5, 20, 10**9),
+        (13, 5, 10**9),
+        (15, 3, 10**9),
+        (3, 10, 40),
+    ]
+
+    def reads():
+        return {
+            (t, s, n, b): (
+                log.peek_range(t, s, max_entries=n, max_bytes=b),
+                log.batch_read(
+                    t, max_bytes=b, checkpoint=False, start_offset=s,
+                    max_entries=n,
+                ),
+            )
+            for t in topics
+            for s, n, b in windows
+        }
+
+    before = reads()
+    assert all(p == b for p, b in before.values())
+    # uncoalesced, the rewrite leaves one file per hash partition, so a
+    # topic's segments land in files in no particular offset order
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        log.compact()
+    finally:
+        spark.conf.set(key, prev)
+    [rec] = log._manifest_records()
+    assert rec["path"].startswith(str(tmp_path / "cmpwin" / "compacted"))
+    assert len(glob.glob(os.path.join(rec["path"], "*.parquet"))) > 1
+    assert reads() == before
+
+    for t in topics:
+        log.multi_append({t: [f"{t}|late.{i}".encode() for i in range(3)]})
+    for t in topics:
+        want = [payload(t, 2, i) for i in (2, 3, 4)] + [
+            f"{t}|late.{i}".encode() for i in (0, 1)
+        ]
+        assert log.peek_range(t, 12, max_entries=5) == want
+        assert log.batch_read(
+            t, checkpoint=False, start_offset=12, max_entries=5
+        ) == want
+    assert {t: log.cursor(t) for t in topics} == {t: 0 for t in topics}
+    log.close()
+
+
+def test_historical_window_reads_across_compacted_gap(spark, tmp_path):
+    """A batch vacuumed before a compaction leaves a gap inside the
+    compacted record's offset range (below the cursors). A historical
+    window that spans the gap delivers the surviving entries on both
+    sides of it, before and after compaction alike."""
+    log = WalrusLog(spark, str(tmp_path / "cmpgap"))
+    log.multi_append({"t": [b"t1", b"t2", b"t3"], "u": [b"u1"]})
+    log.multi_append({"t": [b"t4", b"t5", b"t6"]})  # only t: vacuumable
+    log.multi_append({"t": [b"t7", b"t8", b"t9"], "u": [b"u2"]})
+    assert log.batch_read("t", max_entries=6) == [
+        b"t1", b"t2", b"t3", b"t4", b"t5", b"t6",
+    ]
+    assert log.vacuum() == 1  # the first batch survives: u1 is unread
+    want = [b"t2", b"t3", b"t7", b"t8"]
+    assert log.peek_range("t", 1, max_entries=4) == want
+    log.compact()
+    assert log.peek_range("t", 1, max_entries=4) == want
+    assert log.batch_read(
+        "t", checkpoint=False, start_offset=1, max_entries=4
+    ) == want
+    assert log.batch_read("t") == [b"t7", b"t8", b"t9"]
+    log.close()
+
+
+def test_manifest_index_under_concurrent_commits_and_reads(spark, tmp_path):
+    """The manifest index is shared by every reading and committing
+    thread. With more threads than cores and a short switch interval,
+    every peek must see a contiguous prefix of the topic that never
+    shrinks, and the last peek sees every committed entry."""
+    import sys
+    import threading
+
+    log = WalrusLog(spark, str(tmp_path / "idxstress"))
+    n_writers, n_readers, per_writer = 2, 2 * (os.cpu_count() or 2), 40
+    errs: list[str] = []
+    done = threading.Event()
+
+    def writer(k: int) -> None:
+        for i in range(per_writer):
+            log.multi_append({f"w{k}": [f"{i}".encode()]})
+
+    def reader(k: int) -> None:
+        seen = {t: 0 for t in (f"w{j}" for j in range(n_writers))}
+        while not done.is_set():
+            for t in seen:
+                got = log.peek_range(t, 0)
+                if got != [f"{i}".encode() for i in range(len(got))]:
+                    errs.append(f"{t}: not a contiguous prefix")
+                if len(got) < seen[t]:
+                    errs.append(f"{t}: {len(got)} < {seen[t]}")
+                seen[t] = len(got)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ws = [threading.Thread(target=writer, args=(k,)) for k in range(n_writers)]
+        rs = [threading.Thread(target=reader, args=(k,)) for k in range(n_readers)]
+        for t in ws + rs:
+            t.start()
+        for t in ws:
+            t.join(timeout=120)
+        done.set()
+        for t in rs:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ws + rs)
+    assert not errs, errs[:5]
+    for k in range(n_writers):
+        assert log.peek_range(f"w{k}", 0) == [
+            f"{i}".encode() for i in range(per_writer)
+        ]
+    log.close()
+
+
+def test_manifest_index_relists_when_a_listed_record_is_gone(
+    spark, tmp_path, monkeypatch
+):
+    """A listing taken before a compaction names records the compaction
+    has since deleted and misses the record that replaced them. The
+    index must list again, not drop the vanished names and serve a view
+    without the compacted record."""
+    root = str(tmp_path / "stale")
+    log = WalrusLog(spark, root)
+    for k in range(2):
+        log.multi_append({"t": [f"{5 * k + i + 1}".encode() for i in range(5)]})
+    mdir = log._manifest_dir
+    stale = os.listdir(mdir)
+    log.compact()
+    log.close()
+    reader = WalrusLog(spark, root)
+    real_listdir = os.listdir
+    served = []
+
+    def listdir(path):
+        if path == mdir and not served:
+            served.append(path)
+            return list(stale)
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", listdir)
+    want = [f"{i}".encode() for i in range(1, 11)]
+    assert reader.peek_range("t", 0) == want
+    assert served  # the stale listing was the one the rebuild started from
+    assert reader.batch_read("t") == want
+    reader.close()
+
+
+def test_window_reads_race_compaction(spark, tmp_path):
+    """Windows read while compact() rewrites the log under them start at
+    exactly after+1 and are contiguous (nothing is vacuumed, so every
+    offset exists), and a consuming reader racing the same compactions
+    gets every entry exactly once in order."""
+    import random
+    import threading
+
+    log = WalrusLog(spark, str(tmp_path / "cmprace"))
+    n_batches, per = 6, 5
+    for k in range(n_batches):
+        log.multi_append(
+            {t: [f"{per * k + i + 1}".encode() for i in range(per)]
+             for t in ("peek", "eat")}
+        )
+    total = n_batches * per
+    errs: list[str] = []
+    consumed: list[bytes] = []
+    done = threading.Event()
+
+    def peeker(seed: int) -> None:
+        rnd = random.Random(seed)
+        while not done.is_set():
+            after = rnd.randrange(total)
+            n = rnd.randrange(1, 12)
+            for got in (
+                log.peek_range("peek", after, max_entries=n),
+                log.batch_read(
+                    "peek", checkpoint=False, start_offset=after, max_entries=n
+                ),
+            ):
+                want = [
+                    f"{o}".encode() for o in range(after + 1, min(total, after + n) + 1)
+                ]
+                if got != want:
+                    errs.append(f"after={after} n={n}: {got[:3]}...")
+
+    def eater() -> None:
+        while len(consumed) < total and not done.is_set():
+            consumed.extend(log.batch_read("eat", max_entries=3))
+
+    threads = [threading.Thread(target=peeker, args=(s,)) for s in range(2)]
+    threads.append(threading.Thread(target=eater))
+    for t in threads:
+        t.start()
+    try:
+        for _ in range(3):
+            log.compact()
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs[:5]
+    consumed.extend(log.batch_read("eat"))
+    assert consumed == [f"{o}".encode() for o in range(1, total + 1)]
+    log.close()
+
+
+def test_offset_reads_start_no_spark_job(spark, tmp_path, job_probe):
+    """read_next, batch_read, batch_read_with_watermark and peek_range
+    are driver-side range reads: none of them starts a Spark job."""
+    log = WalrusLog(spark, str(tmp_path / "nojob"))
+    log.multi_append({"t": [b"a", b"b", b"c", b"d"]})
+    first = job_probe()
+    assert log.peek_range("t", 0, max_entries=2) == [b"a", b"b"]
+    assert log.batch_read("t", checkpoint=False, start_offset=2) == [b"c", b"d"]
+    assert log.read_next("t") == b"a"
+    assert log.batch_read_with_watermark("t") == ([b"b", b"c", b"d"], 4)
+    assert job_probe() == first + 1  # no Spark job in between
     log.close()
 
 

@@ -32,19 +32,17 @@ tokio task); at scale the driver process hosting the WalrusLog would
 host this listener too.
 
 GET is served through a per-topic read-ahead buffer (_TopicReadAhead):
-one single-stage Spark peek (WalrusLog.peek_range — a closed
-offset-range scan, no sort/window stages) amortizes across up to
-READAHEAD_ENTRIES frames, and a background prefetch spawned at
-half-drain overlaps the NEXT window's peek with serving the current
-one, so the refill job leaves the per-frame critical path. Each frame
-commits the shared cursor by exactly one entry (metadata-only,
-crash-safe, coherent with library-API consumers via optimistic
-expect-commits). PUT goes through natural group commit
-(_GroupCommitter): everything queued while the previous commit ran
-lands as ONE atomic multi_append, and each frame replies OK only after
-its own entry is durably committed. The wire CONTRACT is unchanged —
-one entry per GET (consumed; "EMPTY" when caught up), OK-after-commit
-per PUT.
+one stateless peek (WalrusLog.peek_range, a driver-side read of the
+one or two committed batches the window overlaps, no Spark job) fills
+up to READAHEAD_ENTRIES frames, and each frame commits the shared
+cursor by exactly one entry (metadata-only, crash-safe, coherent with
+library-API consumers via optimistic expect-commits). PUT goes through
+natural group commit (_GroupCommitter): everything queued while the
+previous commit ran lands as ONE atomic multi_append, and each frame
+replies OK only after its own entry is durably committed. The wire
+CONTRACT is unchanged — one entry per GET (consumed; "EMPTY" when
+caught up), OK-after-commit per PUT. Besides the server's connection
+threads, the group committer is the only thread the wire plane starts.
 """
 
 from __future__ import annotations
@@ -57,12 +55,13 @@ from collections import deque
 
 MAX_FRAME_LEN = 64 * 1024
 
-# GET read-ahead batch: one Spark job peeks this many entries; each GET
-# frame then pops one and commits the cursor with a metadata-only
-# advance. 1024 gives the background prefetch (spawned at half-drain)
-# a ~0.5 s serving runway to hide the refill job entirely; the
-# buffered window is PEEKED, not consumed, so a larger buffer costs
-# nothing in delivery semantics — a crash loses only un-replied frames.
+# GET read-ahead batch: one peek fills this many entries; each GET frame
+# then pops one and commits the cursor with a metadata-only advance.
+# A refill lists the manifest, reads a batch file and checksums every
+# entry, so it is amortized over many frames rather than paid per
+# frame. The buffered window is PEEKED, not consumed, so a larger
+# buffer costs nothing in delivery semantics — a crash loses only
+# un-replied frames.
 READAHEAD_ENTRIES = 1024
 # Byte budget for the peek — wire payloads are ≤64 KiB frames, so cap
 # the buffered bytes rather than inheriting batch_read's 10 GiB limit.
@@ -72,13 +71,11 @@ READAHEAD_BYTES = 4 * 1024 * 1024
 class _TopicReadAhead:
     """Per-topic server-side GET buffer: peek-then-commit.
 
-    The r5 wire plane ran one full Spark job per GET frame
-    (batch_read(max_entries=1)) — correct but single-digit GET/s. This
-    buffer amortizes ONE stateless peek (batch_read with
-    start_offset=cursor, checkpoint=False) across up to
-    READAHEAD_ENTRIES frames; each delivered frame advances the shared
-    cursor by exactly one entry via WalrusLog.commit_cursor — a
-    metadata-only operation, no job.
+    One stateless peek (WalrusLog.peek_range from the shared cursor)
+    fills the buffer with up to READAHEAD_ENTRIES entries; each
+    delivered frame advances the shared cursor by exactly one entry
+    via WalrusLog.commit_cursor_deferred — a metadata-only operation.
+    The buffer is refilled on the frame that finds it empty.
 
     Delivery semantics are unchanged from the unbuffered path:
     buffered entries are PEEKED, not consumed — the cursor only ever
@@ -96,11 +93,6 @@ class _TopicReadAhead:
     ever double-delivered through this path.
     """
 
-    # close() join bound: a peek job mid-flight must finish (it holds
-    # no locks; worst case one single-stage scan). Class attr so tests
-    # can wedge a prefetch and exercise the timeout path in ms.
-    JOIN_TIMEOUT = 60.0
-
     def __init__(self, log, topic: str) -> None:
         self.log = log
         self.topic = topic
@@ -108,109 +100,12 @@ class _TopicReadAhead:
         self.base = 0  # cursor value when the buffer was filled
         self.delivered = 0  # entries popped since the fill
         self.buf: deque[bytes] = deque()
-        # One outstanding background prefetch: {"start", "evt", "rows"}.
-        # Spawned when the buffer drains to half so the NEXT window's
-        # peek job overlaps serving the current one — the refill leaves
-        # the per-frame critical path entirely as long as half a buffer
-        # outlasts one peek job (~0.3 s single-stage peek_range vs
-        # ~0.5 s of serving runway at 1000 GET/s).
-        self._prefetch: dict | None = None
-        # lifecycle (r12 verdict #1): the prefetch runs a REAL Spark
-        # job on a daemon thread; close() must join it before the owner
-        # tears the session down, or the orphaned action races
-        # spark.stop() (in r12 that race spewed ~500 task-rejection
-        # ERRORs over the driver's bench capture). _pf_thread tracks
-        # the one outstanding thread; _closed gates any new spawn.
-        self._pf_thread: threading.Thread | None = None
         self._closed = False
-        # job-group tag for the prefetch's Spark action: lets close()
-        # cancel a WEDGED peek instead of returning with a live thread
-        # (job groups are thread-local, so tagging inside run() scopes
-        # the cancel to exactly this buffer's job)
-        self._job_group = f"walrus-wire-prefetch-{topic}-{id(self):x}"
 
     def close(self) -> None:
-        """Quiesce: no new prefetch can spawn, and the outstanding one
-        (if any) is joined — its Spark job completes BEFORE this
-        returns, so a subsequent spark.stop() finds no in-flight
-        action from this buffer. Idempotent.
-
-        A join that times out is REPORTED, never swallowed (r13
-        verdict #3): a wedged peek would otherwise let close() return
-        with a live thread and resurrect exactly the spark.stop() race
-        this contract exists to prevent — so the thread's job group is
-        cancelled (unwedging a stuck Spark action) and a loud
-        RuntimeWarning names the survivor."""
+        """Refuse every later GET on this buffer. Idempotent."""
         with self.lock:
             self._closed = True
-            self._prefetch = None  # result, if any, is never claimed
-            t, self._pf_thread = self._pf_thread, None
-        if t is not None:
-            t.join(timeout=self.JOIN_TIMEOUT)
-            if t.is_alive():
-                import warnings
-
-                try:
-                    self.log.spark.sparkContext.cancelJobGroup(
-                        self._job_group
-                    )
-                except Exception:  # noqa: BLE001 — context may be gone
-                    pass
-                warnings.warn(
-                    f"_TopicReadAhead.close({self.topic!r}): prefetch "
-                    f"thread {t.name} still alive after "
-                    f"{self.JOIN_TIMEOUT:g}s; cancelled job group "
-                    f"{self._job_group!r} — do not stop the Spark "
-                    "session until it exits",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                t.join(timeout=5)  # give the cancel a moment to land
-
-    def _spawn_prefetch(self, start: int) -> None:
-        # caller holds self.lock, so this check is ordered with close()
-        if self._closed:
-            return
-        pf = {"start": start, "evt": threading.Event(), "rows": None}
-        self._prefetch = pf
-
-        def run() -> None:
-            try:
-                self.log.spark.sparkContext.setJobGroup(
-                    self._job_group,
-                    f"wire GET prefetch for topic {self.topic!r}",
-                    interruptOnCancel=True,
-                )
-            except Exception:  # noqa: BLE001 — tagging is best-effort
-                pass
-            try:
-                pf["rows"] = self.log.peek_range(
-                    self.topic,
-                    start,
-                    max_entries=READAHEAD_ENTRIES,
-                    max_bytes=READAHEAD_BYTES,
-                )
-            except Exception:  # noqa: BLE001
-                # Drop the result, not the error: the consumer falls
-                # back to a synchronous peek, which re-raises anything
-                # persistent (ChecksumError) against the frame that
-                # actually consumes — never against a bystander.
-                pf["rows"] = None
-            finally:
-                pf["evt"].set()
-
-        self._pf_thread = threading.Thread(target=run, daemon=True)
-        self._pf_thread.start()
-
-    def _take_prefetch(self, want_start: int) -> list[bytes] | None:
-        """Claim the outstanding prefetch iff it starts exactly where
-        the buffer must continue; a stale one (another consumer moved
-        the shared cursor since it was spawned) is discarded unread."""
-        pf, self._prefetch = self._prefetch, None
-        if pf is None or pf["start"] != want_start:
-            return None
-        pf["evt"].wait()
-        return pf["rows"] or None
 
     def get_next(self) -> bytes | None:
         # The in-memory pop+advance runs under the buffer lock; the
@@ -225,8 +120,8 @@ class _TopicReadAhead:
         with self.lock:
             if self._closed:
                 # a handler thread racing server shutdown must not
-                # start a fresh Spark peek against a session the owner
-                # is about to stop (same contract as _group_committer)
+                # read a log the owner is about to close (same
+                # contract as _group_committer)
                 raise RuntimeError("server is shutting down")
             while True:
                 cur = self.log.cursor(self.topic)
@@ -239,28 +134,17 @@ class _TopicReadAhead:
                         self.delivered += 1
                         if need_flush:
                             need_cover = cur + 1
-                        if (
-                            self._prefetch is None
-                            and len(self.buf) <= READAHEAD_ENTRIES // 2
-                        ):
-                            # next window starts after the last
-                            # buffered offset: base+delivered+len(buf)
-                            self._spawn_prefetch(
-                                self.base + self.delivered + len(self.buf)
-                            )
                         break
                     # lost a race to another consumer — resync below
                 self.buf.clear()
                 self.delivered = 0
                 self.base = self.log.cursor(self.topic)
-                rows = self._take_prefetch(self.base)
-                if rows is None:
-                    rows = self.log.peek_range(
-                        self.topic,
-                        self.base,
-                        max_entries=READAHEAD_ENTRIES,
-                        max_bytes=READAHEAD_BYTES,
-                    )
+                rows = self.log.peek_range(
+                    self.topic,
+                    self.base,
+                    max_entries=READAHEAD_ENTRIES,
+                    max_bytes=READAHEAD_BYTES,
+                )
                 if not rows:
                     return None
                 self.buf.extend(rows)
@@ -391,13 +275,11 @@ class CommandShell:
             return self._committer
 
     def close(self) -> None:
-        """Quiesce EVERY background worker this shell owns: the group
-        committer drains (in-flight PUT waiters get their replies),
-        then every topic's read-ahead joins its outstanding prefetch —
-        after this returns, no thread spawned by the wire plane is
-        alive and no new Spark job can start through it (r12 verdict
-        #1: an un-joined prefetch raced spark.stop() and clobbered the
-        round's bench capture)."""
+        """Quiesce the wire plane: the group committer drains
+        (in-flight PUT waiters get their replies) and every topic's
+        read-ahead refuses further GETs — after this returns, no
+        thread spawned by the wire plane is alive and no read or
+        commit can start through it."""
         with self._gc_guard:
             self._closed = True
             committer, self._committer = self._committer, None

@@ -36,7 +36,11 @@ Architecture (Spark-first, NOT a port):
   * Offsets: per-topic contiguous, assigned by the single writer from
     the persisted high watermark — the exact analog of the reference's
     one-leader-per-segment write fencing (distributed-walrus/src/
-    bucket.rs:110-118). Reads are fully distributed Spark scans.
+    bucket.rs:110-118). Offset reads (batch_read, read_next,
+    peek_range) are driver-side reads of the one or two batches a
+    window overlaps, found through an in-memory manifest index; whole-
+    log reads (df(), topic_size, batch_read_at_byte) are distributed
+    Spark scans.
   * Cursors: tiny JSON sidecar written via tmp+atomic-rename, mirroring
     WalIndex's fsync+rename (src/wal/runtime/index.rs:70-83).
   * Stream mirror: <root>/stream/ holds one hardlinked directory per
@@ -57,20 +61,24 @@ whole-log exclusive gate, so maintenance can never race a commit —
 compact snapshots, `replaces` lists, and cleanup all observe one
 consistent manifest. Writership verify + commit runs under an OS-level
 fence (flock on <root>/writer.lock), so a takeover can never interleave
-with a commit. Reads are lock-free Spark scans.
+with a commit. Reads take no write-side lock.
 
-Driver-side state is O(topics) metadata only — no data ever passes
-through the driver except the payloads handed to the embedded append API
-itself (at scale, ingestion runs through walrus_spark.streaming instead).
+Driver-side state is metadata only: O(topics) watermarks and cursors
+plus the manifest index, O(committed batches). Data passes through the
+driver only as the payloads handed to the embedded append API and the
+bounded windows (≤2000 entries) an offset read delivers (at scale,
+ingestion runs through walrus_spark.streaming instead).
 """
 
 from __future__ import annotations
 
+import bisect
 import fcntl
 import json
 import os
 import re
 import shutil
+import struct
 import threading
 import time
 import uuid
@@ -90,9 +98,9 @@ from pyspark.sql.types import (
 )
 
 # `crc` is the per-entry checksum analog of the reference's FNV-1a
-# entry checksum (src/wal/block.rs:43-77): xxhash64(value) computed
-# JVM-side at commit time and re-verified on every batch_read /
-# read_next (corruption tests: reference tests/unit.rs:110-137).
+# entry checksum (src/wal/block.rs:43-77): xxhash64(value) computed at
+# commit time and re-verified on every batch_read / read_next /
+# peek_range (corruption tests: reference tests/unit.rs:110-137).
 # Nullable so pre-checksum data files stay readable (null = legacy,
 # skipped by verification).
 LOG_SCHEMA = StructType(
@@ -290,9 +298,10 @@ def _sanitize_namespace(key: str) -> str:
 # --------------------------------------------------------------------------
 # Pure-python XXH64 (Yann Collet's public spec), seed 42 — bit-identical
 # to Spark's `xxhash64` expression on BinaryType (parity pinned by
-# test_xxhash64_python_matches_spark). Lets the driver-side small-batch
-# append path stamp the same per-entry checksum the JVM read path
-# verifies on every delivery.
+# test_xxhash64_python_matches_spark). The driver-side small-batch
+# append path stamps the per-entry checksum with it, and the range read
+# re-verifies every delivered entry with it, whichever writer (pyarrow
+# or a Spark job's xxhash64) stamped the entry.
 _X1 = 11400714785074694791
 _X2 = 14029467366897019727
 _X3 = 1609587929392839161
@@ -301,54 +310,65 @@ _X5 = 2870177450012600261
 _M64 = (1 << 64) - 1
 
 
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
+_STRIPE = struct.Struct("<4Q")  # one 32-byte stripe = four LE lanes
+_LANE = struct.Struct("<Q")
+_HALF = struct.Struct("<I")
 
 
 def _xxhash64_py(data: bytes, seed: int = 42) -> int:
-    """XXH64(data, seed) as a SIGNED 64-bit int (Spark's return type)."""
+    """XXH64(data, seed) as a SIGNED 64-bit int (Spark's return type).
+
+    The stripe loop unpacks a 32-byte stripe's four little-endian lanes
+    in one struct call and keeps the lanes in locals with the rotations
+    written out: the read path verifies every delivered entry with this
+    function, so its per-byte cost is a read-path cost."""
     n = len(data)
-    i = 0
+    end = n - n % 32
     if n >= 32:
-        v = [
-            (seed + _X1 + _X2) & _M64,
-            (seed + _X2) & _M64,
-            seed & _M64,
-            (seed - _X1) & _M64,
-        ]
-        while i <= n - 32:
-            for j in range(4):
-                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
-                v[j] = _rotl64((v[j] + lane * _X2) & _M64, 31) * _X1 & _M64
-            i += 32
+        v1 = (seed + _X1 + _X2) & _M64
+        v2 = (seed + _X2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _X1) & _M64
+        for k1, k2, k3, k4 in _STRIPE.iter_unpack(memoryview(data)[:end]):
+            v1 = (v1 + k1 * _X2) & _M64
+            v1 = ((v1 << 31 | v1 >> 33) & _M64) * _X1 & _M64
+            v2 = (v2 + k2 * _X2) & _M64
+            v2 = ((v2 << 31 | v2 >> 33) & _M64) * _X1 & _M64
+            v3 = (v3 + k3 * _X2) & _M64
+            v3 = ((v3 << 31 | v3 >> 33) & _M64) * _X1 & _M64
+            v4 = (v4 + k4 * _X2) & _M64
+            v4 = ((v4 << 31 | v4 >> 33) & _M64) * _X1 & _M64
         h = (
-            _rotl64(v[0], 1)
-            + _rotl64(v[1], 7)
-            + _rotl64(v[2], 12)
-            + _rotl64(v[3], 18)
+            (v1 << 1 | v1 >> 63)
+            + (v2 << 7 | v2 >> 57)
+            + (v3 << 12 | v3 >> 52)
+            + (v4 << 18 | v4 >> 46)
         ) & _M64
-        for vj in v:
-            h = ((h ^ (_rotl64((vj * _X2) & _M64, 31) * _X1 & _M64)) * _X1 + _X4) & _M64
+        for v in (v1, v2, v3, v4):
+            v = v * _X2 & _M64
+            h ^= ((v << 31 | v >> 33) & _M64) * _X1 & _M64
+            h = (h * _X1 + _X4) & _M64
     else:
         h = (seed + _X5) & _M64
     h = (h + n) & _M64
+    i = end
     while i + 8 <= n:
-        k = int.from_bytes(data[i : i + 8], "little")
-        h ^= _rotl64((k * _X2) & _M64, 31) * _X1 & _M64
-        h = (_rotl64(h, 27) * _X1 + _X4) & _M64
+        k = _LANE.unpack_from(data, i)[0] * _X2 & _M64
+        h ^= ((k << 31 | k >> 33) & _M64) * _X1 & _M64
+        h = (((h << 27 | h >> 37) & _M64) * _X1 + _X4) & _M64
         i += 8
     if i + 4 <= n:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _X1) & _M64
-        h = (_rotl64(h, 23) * _X2 + _X3) & _M64
+        h ^= _HALF.unpack_from(data, i)[0] * _X1 & _M64
+        h = (((h << 23 | h >> 41) & _M64) * _X2 + _X3) & _M64
         i += 4
     while i < n:
-        h ^= (data[i] * _X5) & _M64
-        h = (_rotl64(h, 11) * _X1) & _M64
+        h ^= data[i] * _X5 & _M64
+        h = ((h << 11 | h >> 53) & _M64) * _X1 & _M64
         i += 1
     h ^= h >> 33
-    h = (h * _X2) & _M64
+    h = h * _X2 & _M64
     h ^= h >> 29
-    h = (h * _X3) & _M64
+    h = h * _X3 & _M64
     h ^= h >> 32
     return h - (1 << 64) if h >= (1 << 63) else h
 
@@ -442,7 +462,7 @@ class WalrusLog:
         # maintenance the whole-log exclusion the old global lock
         # provided; the meta RLock is the short global section guarding
         # shared metadata (hw/dirty/txns) + its sidecar flush. Reads
-        # are lock-free Spark scans.
+        # take none of these.
         self._rw = _SharedExclusiveLock()
         self._topic_locks: dict[str, threading.Lock] = {}
         self._consume_locks: dict[str, threading.Lock] = {}
@@ -479,6 +499,11 @@ class WalrusLog:
         # reads that re-listed the manifest after losing a file race
         # with concurrent reclamation (surfaced via metrics())
         self.read_relists = 0
+        # in-memory manifest index (see _manifest_index)
+        self._index_lock = threading.Lock()
+        self._index_listing: list[str] | None = None
+        self._index_parsed: dict[str, dict] = {}
+        self._index: tuple[list[dict], dict] = ([], {})
         # unpinned-ingest audits that failed and reran pinned
         # (nondeterministic source layouts; surfaced via metrics())
         self.ingest_pinned_retries = 0
@@ -694,13 +719,55 @@ class WalrusLog:
         commit) makes compaction crash-safe: until the compact record's
         atomic rename the old records serve reads, after it they are
         dead regardless of whether their cleanup finished."""
-        recs = []
-        for name in sorted(os.listdir(self._manifest_dir)):
-            if name.endswith(".json"):
-                with open(os.path.join(self._manifest_dir, name)) as f:
-                    recs.append(json.load(f))
-        replaced = {b for r in recs for b in r.get("replaces", [])}
-        return [r for r in recs if r["batch"] not in replaced]
+        return list(self._manifest_index()[0])
+
+    def _manifest_index(self) -> tuple[list[dict], dict]:
+        """(live records, per-topic spans), from an in-memory index.
+
+        Every call lists the manifest directory once, parses only the
+        record names it has not seen before, and drops names that
+        vanished; an unchanged listing (compared as listed, so a
+        reordered one merely rebuilds) reuses the previous result. A
+        topic's span is ``(lasts, recs)``: its live records sorted by
+        their last offset for that topic, so ``bisect`` finds the first
+        record that can hold an offset. Live records never overlap in a
+        topic's offsets (a compaction replaces every record it covers).
+        Listing on every call is what keeps commits, vacuums and
+        compactions by this or another instance visible without any
+        update hook. The directory is listed under the lock, so a stored
+        index is never older than one stored before it; a listed record
+        that is gone when opened means the listing is stale (a
+        compaction may have committed its replacement since), so the
+        directory is listed again rather than the name dropped."""
+        with self._index_lock:
+            while True:
+                listing = os.listdir(self._manifest_dir)
+                if listing == self._index_listing:
+                    return self._index
+                names = {n for n in listing if n.endswith(".json")}
+                parsed = {
+                    n: r for n, r in self._index_parsed.items() if n in names
+                }
+                try:
+                    for name in names - parsed.keys():
+                        with open(os.path.join(self._manifest_dir, name)) as f:
+                            parsed[name] = json.load(f)
+                except FileNotFoundError:
+                    continue
+                recs = [parsed[n] for n in sorted(parsed)]
+                replaced = {b for r in recs for b in r.get("replaces", [])}
+                live = [r for r in recs if r["batch"] not in replaced]
+                by_topic: dict[str, list[tuple[int, dict]]] = {}
+                for r in live:
+                    for t, rng in r["topics"].items():
+                        by_topic.setdefault(t, []).append((int(rng["last"]), r))
+                spans = {}
+                for t, items in by_topic.items():
+                    items.sort(key=lambda x: x[0])
+                    spans[t] = ([x[0] for x in items], [x[1] for x in items])
+                self._index_listing, self._index_parsed = listing, parsed
+                self._index = (live, spans)
+                return self._index
 
     def _flush_meta(self) -> None:
         # txn ids ride in meta as well as in manifest records: vacuum
@@ -1538,7 +1605,7 @@ class WalrusLog:
         return self.df().where(F.col("topic") == topic)
 
     def _read_with_relist(self, attempt, tries: int = 3):
-        """Run a read job, re-listing the manifest on a file-level race.
+        """Run a read, re-listing the manifest on a file-level race.
 
         A read's plan captures the batch-dir file list at build time; a
         concurrent vacuum/compact (maintenance daemon, or another
@@ -1559,7 +1626,8 @@ class WalrusLog:
             except Exception as e:  # noqa: BLE001
                 s = str(e)
                 transient = (
-                    "FileNotFoundException" in s
+                    isinstance(e, FileNotFoundError)
+                    or "FileNotFoundException" in s
                     or "does not exist" in s
                     or "FileReadException" in s
                     or "No such file" in s
@@ -1589,13 +1657,14 @@ class WalrusLog:
         entry if available), from the shared cursor or a stateless
         start_offset (walrus_read.rs:368-1198).
 
-        The scan is a distributed TakeOrdered over `offset > cursor` —
-        offset and topic predicates push down to parquet (min/max row-
-        group pruning), so at scale this touches only the tail files.
+        The entries come from _read_range: a driver-side read of only
+        the committed batches that hold the offsets after the cursor,
+        found through the in-memory manifest index — no Spark job, and
+        a cost that follows the window rather than the age of the log.
 
         CONSUMING reads (checkpoint=True, no start_offset) serialize
-        per topic: the shared cursor is a read-modify-write spanning a
-        Spark job, so two concurrent consumers of one topic would both
+        per topic: the shared cursor is a read-modify-write spanning
+        the read, so two concurrent consumers of one topic would both
         read the same cursor and double-deliver (the reference's
         per-topic reader state is likewise serialized). Peeks and
         stateless reads touch no cursor and stay lock-free."""
@@ -1616,66 +1685,20 @@ class WalrusLog:
         start_offset: int | None,
         max_entries: int,
     ) -> list[bytes]:
-        cursor = (
+        after = (
             int(start_offset)
             if start_offset is not None
             else self._cursors.get(topic, 0)
         )
-        from pyspark.sql.window import Window
-
-        def attempt():
-            w = Window.orderBy("offset")
-            cand = (
-                self.topic_df(topic)
-                .where(F.col("offset") > cursor)
-                .select(
-                    "offset",
-                    "value",
-                    # per-entry checksum verification on READ, JVM-side
-                    # (the FNV-1a verify of src/wal/block.rs:43-77; null
-                    # crc = pre-checksum data, skipped)
-                    (
-                        F.col("crc").isNull()
-                        | (F.xxhash64("value") == F.col("crc"))
-                    ).alias("crc_ok"),
-                    F.col("crc").isNotNull().alias("crc_checked"),
-                )
-                .orderBy("offset")
-                .limit(min(max_entries, MAX_BATCH_ENTRIES))
-                .withColumn("cum", F.sum(F.length("value")).over(w))
-                .withColumn("rn", F.row_number().over(w))
-                .where(
-                    (F.col("cum") <= max_bytes)
-                    | (F.col("rn") == 1)  # always deliver ≥1
-                )
-            )
-            # Explicit final sort: entry order (and the cursor advance)
-            # is a contract, not an artifact of the window's
-            # partitioning — a plan change must not be able to reorder
-            # delivery.
-            return cand.orderBy("offset").collect()
-
-        rows = self._read_with_relist(attempt)
-        bad = [int(r["offset"]) for r in rows if not r["crc_ok"]]
-        if bad:
-            # loud and BEFORE any cursor advance: a corrupt entry is
-            # never silently consumed (reference tests/unit.rs:110-137)
-            raise ChecksumError(
-                f"checksum mismatch in topic {topic!r} at offsets "
-                f"{bad} — stored payload no longer matches its "
-                "commit-time xxhash64"
-            )
-        self._verified_reads[topic] = self._verified_reads.get(
-            topic, 0
-        ) + sum(1 for r in rows if r["crc_checked"])
+        rows = self._read_range(topic, after, max_entries, max_bytes)
         if rows and checkpoint and start_offset is None:
-            new_cursor = max(int(r["offset"]) for r in rows)
+            new_cursor = rows[-1][0]
             self._checkpoint_read(topic, new_cursor, len(rows))
             # lag tracks the SHARED cursor only: a stateless/pinned
             # replay (start_offset=) must not clobber a caught-up
             # consumer's metrics()['consumer_lag']
             self._consumer_lag[topic] = self._hw.get(topic, 0) - new_cursor
-        return [bytes(r["value"]) if r["value"] is not None else b"" for r in rows]
+        return [v for _, v in rows]
 
     def peek_range(
         self,
@@ -1684,68 +1707,55 @@ class WalrusLog:
         max_entries: int = MAX_BATCH_ENTRIES,
         max_bytes: int = MAX_BATCH_BYTES,
     ) -> list[bytes]:
-        """Stateless contiguous-range peek — the high-rate consumer fast
-        path (the wire GET read-ahead plane). Per-topic offsets are
-        contiguous (InvSeqOrder), so ``start_offset < offset <=
-        start_offset + max_entries`` is a CLOSED range predicate that
-        pushes down to parquet row groups: one scan stage, no global
-        sort, no window functions — ordering and the byte budget are
-        applied driver-side over the ≤max_entries collected rows.
-        batch_read's TakeOrdered plan stays the general contract (it
-        must rank an OPEN `offset > cursor` tail); this path exists
-        because a wire consumer refills every few hundred frames and
-        the two-window sorted plan made each refill a multi-stage job
-        (~1.5 s) that capped the whole plane at ~150 GET/s.
+        """Stateless peek of the entries after ``start_offset`` — what
+        the wire GET read-ahead fills its buffer with. It is
+        batch_read(checkpoint=False, start_offset=start_offset) without
+        the argument juggling: the same _read_range, so the same
+        ascending order, per-entry crc verification, byte budget with
+        the ≥1-entry rule, and, for a start_offset below the vacuum
+        horizon, the surviving tail."""
+        return [
+            v for _, v in self._read_range(topic, start_offset, max_entries, max_bytes)
+        ]
 
-        Delivery semantics match batch_read(checkpoint=False,
-        start_offset=...): ascending offsets from start_offset+1, crc
-        verified per entry (JVM-side xxhash64, same expression the
-        commit stamped), ≥1 entry delivered when available even if it
-        alone exceeds max_bytes, tail truncated at the byte budget.
+    def _read_range(
+        self, topic: str, after: int, max_entries: int, max_bytes: int
+    ) -> list[tuple[int, bytes]]:
+        """The one range read under every offset read (read_next,
+        batch_read, batch_read_with_watermark, peek_range): the first
+        ``max_entries`` (≤2000) entries of ``topic`` after offset
+        ``after`` as ascending (offset, payload) pairs, cut at the
+        payload-byte budget but always ≥1 entry when one exists.
 
-        Validity below the vacuum horizon (r12 advisor): the closed
-        window assumes its entries still exist. At or ahead of the
-        live cursor that always holds (vacuum only reclaims
-        fully-consumed batches), which is the only regime the wire
-        plane peeks in. For a HISTORICAL start_offset whose window
-        was reclaimed, the closed range would return [] while
-        batch_read's open `offset > cursor` scan returns the
-        surviving tail — so when the window comes back empty but the
-        high watermark says entries were ever appended beyond
-        start_offset, this method falls back to the open-range
-        batch_read plan (stateless, no cursor touch) and the stated
-        equivalence holds for replay-style callers too. The fallback
-        job is paid only in that historical corner, never on the
-        wire path."""
+        Driver-side and job-free: the manifest index bisects to the
+        first record that can hold an offset past ``after``, and
+        pyarrow reads only the one or two records the window overlaps,
+        with topic and offset predicates pushed down to parquet row
+        groups — the analog of walrus serving a read from the cursor's
+        own block. Every returned entry's crc is checked before the
+        caller can move a cursor: a corrupt entry raises ChecksumError
+        and is never delivered (reference tests/unit.rs:110-137). A
+        record a concurrent vacuum or compaction deletes during the read
+        re-lists the manifest and retries (_read_with_relist)."""
         n = min(int(max_entries), MAX_BATCH_ENTRIES)
-        lo = int(start_offset)
-
-        def attempt():
-            return (
-                self.topic_df(topic)
-                .where((F.col("offset") > lo) & (F.col("offset") <= lo + n))
-                .select(
-                    "offset",
-                    "value",
-                    (
-                        F.col("crc").isNull()
-                        | (F.xxhash64("value") == F.col("crc"))
-                    ).alias("crc_ok"),
-                    F.col("crc").isNotNull().alias("crc_checked"),
-                )
-                .collect()
-            )
-
-        rows = self._read_with_relist(attempt)
-        if not rows and self._hw.get(topic, 0) > lo:
-            # empty closed window but entries were appended beyond lo:
-            # a historical peek below the vacuum horizon — delegate to
-            # the open-range plan so the surviving tail is delivered
-            # (see docstring; wire-plane peeks at the live cursor
-            # never take this branch)
-            return self._batch_read_impl(topic, max_bytes, False, lo, n)
-        rows.sort(key=lambda r: r["offset"])
-        bad = [int(r["offset"]) for r in rows if not r["crc_ok"]]
+        rows = self._read_with_relist(
+            lambda: self._scan_after(topic, int(after), n, max_bytes)
+        )
+        out: list[tuple[int, bytes | None, int | None]] = []
+        cum = 0
+        for row in rows:
+            cum += len(row[1] or b"")
+            if out and cum > max_bytes:
+                break
+            out.append(row)
+        # Spark's xxhash64 of a NULL payload is its seed, 42; a NULL
+        # crc is pre-checksum data and is not checked
+        bad = [
+            off
+            for off, v, crc in out
+            if crc is not None
+            and crc != (42 if v is None else _xxhash64_py(v))
+        ]
         if bad:
             raise ChecksumError(
                 f"checksum mismatch in topic {topic!r} at offsets "
@@ -1754,16 +1764,76 @@ class WalrusLog:
             )
         self._verified_reads[topic] = self._verified_reads.get(
             topic, 0
-        ) + sum(1 for r in rows if r["crc_checked"])
-        out: list[bytes] = []
-        cum = 0
-        for r in rows:
-            v = bytes(r["value"]) if r["value"] is not None else b""
-            cum += len(v)
-            if out and cum > max_bytes:
+        ) + sum(1 for r in out if r[2] is not None)
+        return [(off, v or b"") for off, v, _ in out]
+
+    def _scan_after(
+        self, topic: str, after: int, n: int, max_bytes: int
+    ) -> list[tuple[int, bytes | None, int | None]]:
+        """The first ``n`` (offset, value, crc) rows of ``topic`` after
+        ``after``, reading record by record from the index and stopping
+        at the first record boundary past ``max_bytes`` of payload.
+
+        Vacuum and compaction delete a record's data only after its
+        manifest file, so a read whose records all still have theirs
+        afterwards read whole files; otherwise the data may have gone
+        mid-read and FileNotFoundError sends the caller to re-list."""
+        lasts, recs = self._manifest_index()[1].get(topic, ([], []))
+        rows: list[tuple[int, bytes | None, int | None]] = []
+        size, used = 0, []
+        for rec in recs[bisect.bisect_right(lasts, after):]:
+            need = n - len(rows)
+            if need <= 0 or size > max_bytes:
                 break
-            out.append(v)
-        return out
+            rng = rec["topics"][topic]
+            # offsets are contiguous inside a record, so the next
+            # `need` entries are exactly (lo, hi]
+            lo = max(after, int(rng["first"]) - 1)
+            hi = min(int(rng["last"]), lo + need)
+            got = self._record_rows(rec["path"], topic, lo, hi)
+            if len(got) < need and hi < int(rng["last"]):
+                # a compacted record keeps the gaps of batches vacuumed
+                # before it was written (all below the cursors): a
+                # historical read continues open-ended past them
+                got += self._record_rows(rec["path"], topic, hi, None)
+            rows += got[:need]
+            size += sum(len(v or b"") for _, v, _ in got[:need])
+            used.append(rec["batch"])
+        for b in used:
+            if not os.path.exists(os.path.join(self._manifest_dir, f"{b}.json")):
+                raise FileNotFoundError(f"record {b} reclaimed during a read")
+        return rows
+
+    @staticmethod
+    def _record_rows(
+        path: str, topic: str, lo: int, hi: int | None
+    ) -> list[tuple[int, bytes | None, int | None]]:
+        """Rows of ``topic`` in one record's files with ``lo < offset
+        <= hi`` (``hi=None``: no upper bound), sorted by offset."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        # explicit schema: a pre-checksum file without a crc column
+        # reads as NULL crc (not checked) instead of failing
+        schema = pa.schema(
+            [("topic", pa.string()), ("offset", pa.int64()),
+             ("value", pa.binary()), ("crc", pa.int64())]
+        )
+        flt = (pads.field("topic") == topic) & (pads.field("offset") > lo)
+        if hi is not None:
+            flt &= pads.field("offset") <= hi
+        tbl = (
+            pads.dataset(path, format="parquet", schema=schema)
+            .to_table(columns=["offset", "value", "crc"], filter=flt)
+            .sort_by("offset")
+        )
+        return list(
+            zip(
+                tbl.column("offset").to_pylist(),
+                tbl.column("value").to_pylist(),
+                tbl.column("crc").to_pylist(),
+            )
+        )
 
     def batch_read_with_watermark(
         self,
@@ -1830,8 +1900,6 @@ class WalrusLog:
         deployment scale the manifest would additionally carry
         per-batch byte extents so the seek prunes to one batch; the
         parquet min/max offset stats already prune the payload scan."""
-        from pyspark.sql.window import Window
-
         return self._read_with_relist(
             lambda: self._batch_read_at_byte_once(
                 topic, byte_start, max_bytes, max_entries
@@ -2154,9 +2222,9 @@ class WalrusLog:
     def _sidecar_hw(self, topic: str) -> int:
         """Re-read the topic's high watermark as another process sees
         it: the meta sidecar (the writer flushes it right after its
-        manifest rename), falling back to a scan of the manifest
-        records themselves (authoritative — the same source a live
-        peek read the entries from, closing the rename→flush window).
+        manifest rename), and the manifest index (authoritative — the
+        same source a live peek read the entries from, closing the
+        rename→flush window).
         Returns 0 when nothing is visible."""
         hw = 0
         try:
@@ -2165,12 +2233,11 @@ class WalrusLog:
         except (OSError, json.JSONDecodeError, ValueError):
             pass
         try:
-            for rec in self._manifest_records():
-                t = rec.get("topics", {}).get(topic)
-                if t:
-                    hw = max(hw, int(t["last"]))
+            lasts = self._manifest_index()[1].get(topic, ([], []))[0]
         except (OSError, json.JSONDecodeError):
-            pass
+            lasts = []
+        if lasts:
+            hw = max(hw, lasts[-1])
         return hw
 
     # ------------------------------------------------------------------
@@ -2258,12 +2325,13 @@ class WalrusLog:
                                  snapshotted at delivery time (the GET
                                  reply's high_watermark, rpc.rs:17-20)
         """
+        committed = len(self._manifest_index()[0])
         # snapshot under the meta lock: concurrent appends/registrations
         # mutate these dicts and iteration must not see a resize
         with self._meta_lock:
             return {
                 "n_topics": len(self._hw),
-                "committed_batches": len(self._manifest_records()),
+                "committed_batches": committed,
                 "fsync_count": self.fsync_count,
                 "unpersisted_reads": dict(self._unpersisted_reads),
                 "verified_reads": dict(self._verified_reads),
