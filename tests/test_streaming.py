@@ -139,6 +139,94 @@ def test_stream_ingest_replayed_batch_commits_once(spark, tmp_path):
     assert dst.batch_read("a") == [b"1", b"2"]
 
 
+class _CaptureWriter:
+    """Stands in for a streaming DataFrame: records the foreachBatch
+    function write_log_stream builds, so a test can call it directly."""
+
+    fn = None
+
+    @property
+    def writeStream(self):
+        return self
+
+    def foreachBatch(self, fn):
+        self.fn = fn
+        return self
+
+    def option(self, *_a):
+        return self
+
+    def outputMode(self, *_a):
+        return self
+
+    def trigger(self, **_k):
+        return self
+
+    def start(self):
+        return self
+
+
+def test_stream_ingest_commit_empty_and_replay(spark, tmp_path, job_probe):
+    """The per-micro-batch commit runs no emptiness probe of its own:
+    an empty micro-batch commits nothing, and replaying a committed
+    batch_id returns before any Spark job starts."""
+    log = _mklog(spark, tmp_path, "cmt")
+    cap = _CaptureWriter()
+    write_log_stream(cap, log, str(tmp_path / "cmt_ckpt"))
+    empty = spark.createDataFrame([], "topic string, value binary")
+    cap.fn(empty, 0)
+    assert log._manifest_records() == [] and log.high_watermark("a") == 0
+    batch = spark.createDataFrame(
+        [("a", b"1"), ("a", b"2")], "topic string, value binary"
+    )
+    cap.fn(batch, 1)
+    assert log.high_watermark("a") == 2
+    before = job_probe()
+    cap.fn(batch, 1)  # replay: already committed
+    assert job_probe() == before + 1
+    assert log.high_watermark("a") == 2
+    assert len(log._manifest_records()) == 1
+    # a real stream whose micro-batch filters to no rows commits nothing
+    src_log = _mklog(spark, tmp_path, "cmt_src")
+    src_log.batch_append("a", [b"x"])
+    q = write_log_stream(
+        read_topic_stream(spark, src_log, "nosuch").select("topic", "value"),
+        log,
+        str(tmp_path / "cmt_ckpt2"),
+    )
+    q.awaitTermination(120)
+    assert len(log._manifest_records()) == 1
+
+
+def test_shared_cursor_frame_is_local_relation(spark, tmp_path):
+    """Every micro-batch after the first joins the run cursor; that
+    cursor frame plans as a JVM LocalTableScan, never a Python-built
+    ExistingRDD. (The micro-batch rows themselves arrive as a JVM
+    ExistingRDD, so only the broadcast side is checked.)"""
+    from walrus_spark.streaming import shared_cursor_stream
+
+    log = _mklog(spark, tmp_path, "curplan")
+    log.batch_append("t", [b"e1", b"e2"])
+    log.batch_append("t", [b"e3"])
+    plans: list[str] = []
+    seen: list[int] = []
+
+    def sink(b, _i):
+        plans.append(b._jdf.queryExecution().optimizedPlan().toString())
+        seen.extend(int(r["offset"]) for r in b.collect())
+
+    q = shared_cursor_stream(
+        spark, log, str(tmp_path / "curplan_ckpt"), sink, max_files_per_trigger=1
+    )
+    q.awaitTermination(120)
+    assert sorted(seen) == [1, 2, 3]
+    assert len(plans) == 2
+    assert "BroadcastExchange" not in plans[0]  # empty cursor: no join
+    cursor_side = plans[1].split("BroadcastExchange", 1)[1]
+    assert "LocalTableScan" in cursor_side
+    assert "ExistingRDD" not in cursor_side
+
+
 def test_windowed_counts_matches_batch(spark, tmp_path, sf_dir):
     """Streaming windowed agg over the events fixture == batch DQ8."""
     from walrus_spark.catalog import load_table

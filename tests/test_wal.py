@@ -1387,23 +1387,24 @@ def test_ingest_small_commit_driver_path(spark, tmp_path, monkeypatch):
     log.close()
 
 
-def test_ingest_distributed_arrow_pass2_zero_exchange(
+def test_ingest_distributed_pass2_zero_exchange_no_python(
     spark, tmp_path, monkeypatch
 ):
-    """r15 optimization round: distributed-ingest pass 2 assigns
-    offsets with a per-partition Arrow pass (mapInArrow + pass-1 bases
-    broadcast) instead of a row_number window over (_pid, topic). Two
-    contracts: (a) the staged plan carries NO Exchange — payload bytes
-    never shuffle, _pid IS the partition id so each task numbers its
-    own rows locally; (b) the assignment is bit-equal to the old
-    window semantics — per-topic offsets contiguous from the high
-    watermark, rows numbered in (partition, within-partition scan
-    order), i.e. the order monotonically_increasing_id sorted."""
+    """Distributed-ingest pass 2 numbers rows with a per-partition sort
+    and a broadcast join against the driver's per-(partition, topic)
+    delta table. Three contracts: (a) the staged plan carries NO
+    payload Exchange — _pid IS the partition id, so each task numbers
+    its own rows locally; (b) the assignment is exact — per-topic
+    offsets contiguous from the high watermark, rows numbered in
+    (partition, within-partition scan order); (c) nothing in the plan
+    runs in a Python worker: no MapInArrow / ArrowEvalPython /
+    BatchEvalPython node, and the delta table is a LocalTableScan, not
+    a Python-built ExistingRDD."""
     import pyspark.sql.functions as F
 
     monkeypatch.setattr(WalrusLog, "DRIVER_APPEND_MAX_ROWS", 0)
     log = WalrusLog(
-        spark, str(tmp_path / "ingarrow"), max_segment_entries=1000
+        spark, str(tmp_path / "ingpass2"), max_segment_entries=1000
     )
     n = 5000
     df = (
@@ -1415,30 +1416,23 @@ def test_ingest_distributed_arrow_pass2_zero_exchange(
         )
     )
     src = df.withColumn("_pid", F.spark_partition_id())
-    # (a) plan shape of the staged pass-2 frame
     counts = (
         src.groupBy("_pid", "topic").agg(F.count("*").alias("n")).collect()
     )
-    bases: dict[tuple[int, str], int] = {}
-    next_off: dict[str, int] = {}
-    for r in sorted(counts, key=lambda r: (r["topic"], r["_pid"])):
-        start = next_off.get(r["topic"], 0)
-        bases[(int(r["_pid"]), r["topic"])] = start
-        next_off[r["topic"]] = start + int(r["n"])
-    plan = (
-        log._assign_offsets_arrow(src, bases)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the only Exchange is the test source's own repartition(7); the
-    # pass-2 machinery itself adds none (the old shape added an
-    # Exchange hashpartitioning(_pid, topic) carrying every payload)
+    staged, ranges = log._assign_offsets(src, counts)
+    assert ranges == {t: (1, ranges[t][1]) for t in ("t0", "t1", "t2")}
+    plan = staged._jdf.queryExecution().executedPlan().toString()
+    # (a) the only Exchange is the test source's own repartition(7)
+    # plus the delta table's broadcast; pass 2 adds no
+    # Exchange hashpartitioning(_pid, topic) carrying every payload
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("Exchange") == plan.count(
         "Exchange RoundRobinPartitioning"
-    )
-    assert "MapInArrow" in plan
+    ) + plan.count("BroadcastExchange")
+    # (c) no Python execution node; the broadcast side is local
+    for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD"):
+        assert node not in plan, node
+    assert "LocalTableScan" in plan.split("BroadcastExchange", 1)[1]
     # (b) exact assignment: expected per-topic value sequence is the
     # rows in (partition, scan-order) — which collect() preserves
     expected_seq: dict[str, list[bytes]] = {}
@@ -1454,8 +1448,81 @@ def test_ingest_distributed_arrow_pass2_zero_exchange(
             range(1, len(rows) + 1)
         ), t
         assert [bytes(r["value"]) for r in rows] == expected_seq[t], t
-    # crc-verified delivery path over the Arrow-staged files
+    # crc-verified delivery path over the staged files
     assert len(log.batch_read("t0", checkpoint=False)) > 0
+    log.close()
+
+
+def test_ingest_distributed_edge_topics_and_segment_roll(
+    spark, tmp_path, monkeypatch
+):
+    """Pass 2's delta table assumes the driver orders topics exactly as
+    Spark's sort does (NULLS FIRST, then UTF-8 byte order). A NULL
+    topic, non-ASCII and special topics over six source partitions,
+    with segments rolling mid-commit: offsets are contiguous per topic
+    in (partition, scan) order, segment is (offset-1)//4, every part
+    file is (topic, offset)-sorted, a second commit continues, and the
+    audit never falls back to the pinned rerun."""
+    import glob
+
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    monkeypatch.setattr(WalrusLog, "DRIVER_APPEND_MAX_ROWS", 0)
+    log = WalrusLog(spark, str(tmp_path / "ingedge"), max_segment_entries=4)
+    names = ["é", "日本", "a b", "z"]
+    df = spark.range(0, 90, 1, 6).select(
+        F.when(F.col("id") % 7 == 0, F.lit(None).cast("string"))
+        .otherwise(
+            F.element_at(
+                F.array(*[F.lit(t) for t in names]),
+                (F.col("id") % len(names) + 1).cast("int"),
+            )
+        )
+        .alias("topic"),
+        F.col("id").cast("string").cast("binary").alias("value"),
+    )
+    src = df.withColumn("_pid", F.spark_partition_id())
+    assert src.select("_pid").distinct().count() == 6
+    expected: dict = {}
+    for r in src.select("topic", "value").collect():
+        expected.setdefault(r["topic"], []).append(bytes(r["value"]))
+    assert set(expected) == {None, *names}
+
+    def check(commits: int) -> None:
+        got: dict = {}
+        for r in log.df().collect():
+            got.setdefault(r["topic"], []).append(r)
+        assert set(got) == set(expected)
+        # every row carries its commit's one timestamp
+        stamps = {r["ts"] for rows in got.values() for r in rows}
+        assert None not in stamps and len(stamps) == commits
+        for t, rows in got.items():
+            rows.sort(key=lambda r: r["offset"])
+            assert [r["offset"] for r in rows] == list(
+                range(1, commits * len(expected[t]) + 1)
+            ), t
+            assert [bytes(r["value"]) for r in rows] == expected[t] * commits, t
+            assert all(r["segment"] == (r["offset"] - 1) // 4 for r in rows), t
+        for rec in log._manifest_records():
+            for part in glob.glob(f"{rec['path']}/part-*.parquet"):
+                tbl = pq.read_table(part, columns=["topic", "offset"])
+                keys = [
+                    (t is not None, (t or "").encode(), o)
+                    for t, o in zip(
+                        tbl.column("topic").to_pylist(),
+                        tbl.column("offset").to_pylist(),
+                    )
+                ]
+                assert keys == sorted(keys), part
+
+    log.ingest(df, "topic", "value")
+    check(1)
+    log.ingest(df, "topic", "value")
+    check(2)
+    assert log.ingest_pinned_retries == 0
+    for t in names:
+        assert log.high_watermark(t) == 2 * len(expected[t])
     log.close()
 
 

@@ -383,6 +383,17 @@ def _atomic_write_json(path: str, obj, durable: bool = True) -> None:
     os.rename(tmp, path)
 
 
+def local_frame(spark: SparkSession, **columns) -> DataFrame:
+    """A small driver-built table (``name=pyarrow.Array`` columns) as a
+    DataFrame that plans as a JVM ``LocalTableScan``. createDataFrame
+    over Python rows plans a ``Scan ExistingRDD`` instead, whose tasks
+    run in Python workers — a join against it costs a Python stage per
+    use."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns))
+
+
 class WalrusLog:
     """Embedded topic-log engine over parquet + manifest commit log."""
 
@@ -1359,8 +1370,8 @@ class WalrusLog:
         path = os.path.join(self._data_dir, batch_id)
         # r15 small-commit fast path (the streaming micro-batch shape:
         # many sub-10k-row commits): collect (topic, value) in partition
-        # order — the SAME order pass 2's (_pid, topic) window assigns —
-        # assign offsets driver-side and write with the pyarrow writer
+        # order — the SAME (partition, scan) order pass 2 numbers rows
+        # in — assign offsets driver-side and write with the pyarrow writer
         # the wire-append path already uses. This replaces pass 2's
         # Spark job AND the offset-exactness audit: consistency is by
         # construction, because offsets derive from the rows actually
@@ -1421,54 +1432,21 @@ class WalrusLog:
             }
             self._write_batch_driver(path, rows)
         else:
-            bases_map: dict[tuple[int, str], int] = {}
-            next_off = {}
-            # None-safe key: a NULL topic group sorts first instead of
-            # raising (str < None). Any total order works here — the
-            # sort only makes base assignment deterministic per
-            # (topic, _pid); pass 2 normalizes NULL the same way.
-            for r in sorted(
-                counts,
-                key=lambda r: (r["topic"] is not None, r["topic"] or "", r["_pid"]),
-            ):
-                t = r["topic"]
-                start = next_off.get(t, self._hw.get(t, 0))
-                bases_map[(int(r["_pid"]), t)] = start
-                next_off[t] = start + int(r["n"])
-            ranges = {
-                t: (self._hw.get(t, 0) + 1, last)
-                for t, last in next_off.items()
-            }
-            # Pass 2: assign offsets and write — zero-exchange (see
-            # _assign_offsets_arrow; payloads never leave the node
-            # that scanned them). The bases broadcast is unpersisted
-            # once the staged write (and audit/retry) completes: a
-            # long-lived streaming writer doing many commits must not
-            # accumulate broadcast blocks until GC happens to reclaim
-            # them (r15 advisor).
-            bases_bc = self.spark.sparkContext.broadcast(bases_map)
-            try:
-                staged = self._assign_offsets_arrow(
-                    src, bases_map, bases_bc
+            # Pass 2: assign offsets and write, zero-exchange and
+            # entirely in the JVM (see _assign_offsets) — payloads
+            # never leave the node that scanned them
+            staged, ranges = self._assign_offsets(src, counts)
+            staged.write.mode("overwrite").parquet(path)
+            if not pin and not self._offsets_exact(path, ranges):
+                # layout diverged between the passes (nondeterministic
+                # source) — nothing was committed; discard the staged
+                # files and rerun with the batch pinned by
+                # localCheckpoint
+                shutil.rmtree(path, ignore_errors=True)
+                self.ingest_pinned_retries += 1
+                return self._ingest_locked(
+                    df, topic_col, payload_col, txn, pin=True
                 )
-                staged.sortWithinPartitions("topic", "offset").write.mode(
-                    "overwrite"
-                ).parquet(path)
-                if not pin and not self._offsets_exact(path, ranges):
-                    # layout diverged between the passes
-                    # (nondeterministic source) — nothing was
-                    # committed; discard the staged files and rerun
-                    # with the batch pinned by localCheckpoint
-                    shutil.rmtree(path, ignore_errors=True)
-                    self.ingest_pinned_retries += 1
-                    return self._ingest_locked(
-                        df, topic_col, payload_col, txn, pin=True
-                    )
-            finally:
-                try:
-                    bases_bc.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
         rec = {
             "batch": batch_id,
             "path": path,
@@ -1495,100 +1473,88 @@ class WalrusLog:
                 self.mark_topic_dirty(topic, flush=False)
             self._flush_meta()
 
-    # Base sentinel for a (partition, topic) group pass 1 never saw —
-    # a nondeterministic source changed layout between the passes. The
-    # resulting offsets land wildly outside the expected ranges, so the
-    # pre-commit offset-exactness audit rejects the staged files and
-    # the ingest reruns pinned (the same divergence funnel the old
-    # inner-join shape fell through: there, unseen groups were DROPPED
-    # by the join and the audit caught the missing rows instead).
+    # Delta for a (partition, topic) group pass 1 never saw — a
+    # nondeterministic source changed layout between the passes. Pass
+    # 2's left join finds no delta (and no ts) for such rows and
+    # coalesces the delta to this, so their offsets land wildly outside
+    # the expected ranges; the pre-commit offset-exactness audit rejects
+    # the staged files and the ingest reruns pinned.
     _DIVERGED_BASE = -(1 << 41)
 
-    def _assign_offsets_arrow(
-        self,
-        src: DataFrame,
-        bases: dict[tuple[int, str], int],
-        bases_bc=None,
-    ) -> DataFrame:
-        """Distributed-ingest pass 2 without the payload exchange.
+    def _assign_offsets(
+        self, src: DataFrame, counts: list[Row]
+    ) -> tuple[DataFrame, dict]:
+        """Distributed-ingest pass 2: the staged (topic, offset)-sorted
+        frame and each topic's committed (first, last) range.
 
-        The pre-r15 shape assigned offsets with a row_number window
-        partitioned by (_pid, topic): correct, but its Exchange
-        hash-partitioned EVERY payload byte just to number rows each
-        task could have numbered locally — _pid IS the partition id,
-        so with pass 1's per-(partition, topic) bases broadcast, a
-        per-partition Arrow pass assigns the identical offsets (rows
-        arrive in scan order, exactly the order the window's
-        monotonically_increasing_id sort produced) while payloads stay
-        on the node that scanned them. Only (_pid, topic, value) cross
-        the Arrow boundary; value passes through as untouched Arrow
-        buffers, the per-batch counting is vectorized (factorize +
-        grouped cumcount), and ts/crc stay JVM-side expressions."""
+        One local sort per partition by (topic, scan order) — the scan
+        order is a monotonically_increasing_id taken before the sort —
+        lays each topic out as one run in the order the file is written
+        in. A second monotonically_increasing_id after the sort reads
+        the row's position in its partition (the low 33 bits), so a
+        row's offset is ``position + delta(_pid, topic) + 1``, where the
+        driver derives ``delta = base − start of the topic's run`` from
+        pass 1's per-(partition, topic) counts. That needs the driver to
+        order topics as Spark sorts them: NULLS FIRST, then UTF-8 byte
+        order, which is Python's code-point order. The delta table is a
+        broadcast local relation, so the plan has no Exchange over
+        payloads and no Python stage; ts and crc are JVM expressions.
+        The position is read before the join, and being
+        nondeterministic it keeps the optimizer from dropping the sort
+        under the join."""
         import pyarrow as pa
 
-        max_seg = self.max_segment_entries
-        sentinel = self._DIVERGED_BASE
-        if bases_bc is None:  # caller owns (and unpersists) it otherwise
-            bases_bc = self.spark.sparkContext.broadcast(bases)
-
-        def assign(batches):
-            import numpy as np
-            import pandas as pd
-
-            seen: dict = {}
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                pid = b.column("_pid")[0].as_py()
-                codes, uniques = pd.factorize(
-                    b.column("topic").to_pandas(), use_na_sentinel=False
-                )
-                # factorize surfaces a NULL topic as nan; pass 1's
-                # groupBy keyed it as None — normalize so the base
-                # lookup agrees with the JVM side
-                uniques = [
-                    None if (u is None or u != u) else u for u in uniques
-                ]
-                base_arr = np.fromiter(
-                    (
-                        bases_bc.value.get((pid, u), sentinel)
-                        + seen.get(u, 0)
-                        for u in uniques
-                    ),
-                    dtype=np.int64,
-                    count=len(uniques),
-                )
-                s = pd.Series(codes)
-                cum = s.groupby(s, sort=False).cumcount().to_numpy()
-                off = base_arr[codes] + cum + 1
-                sizes = np.bincount(codes, minlength=len(uniques))
-                for j, u in enumerate(uniques):
-                    seen[u] = seen.get(u, 0) + int(sizes[j])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        b.column("topic"),
-                        pa.array((off - 1) // max_seg, pa.int64()),
-                        pa.array(off, pa.int64()),
-                        b.column("value"),
-                    ],
-                    names=["topic", "segment", "offset", "value"],
-                )
-
-        return (
-            src.select("_pid", "topic", "value")
-            .mapInArrow(
-                assign,
-                "topic string, segment long, offset long, value binary",
+        pids, topics, deltas = [], [], []
+        next_off: dict[str | None, int] = {}
+        run_start: dict[int, int] = {}
+        for r in sorted(
+            counts,
+            key=lambda r: (r["topic"] is not None, r["topic"] or "", r["_pid"]),
+        ):
+            t, p, n = r["topic"], int(r["_pid"]), int(r["n"])
+            base = next_off.get(t, self._hw.get(t, 0))
+            next_off[t] = base + n
+            start = run_start.get(p, 0)
+            run_start[p] = start + n
+            pids.append(p)
+            topics.append(t)
+            deltas.append(base - start)
+        ranges = {
+            t: (self._hw.get(t, 0) + 1, last) for t, last in next_off.items()
+        }
+        # ts rides the broadcast side: the optimizer folds the commit's
+        # current_timestamp into the local relation's rows. Projected on
+        # the payload side it would be a per-commit literal inlined in
+        # the stage's generated code, forcing a fresh Janino compile on
+        # every commit (~40 ms on a 12k-row commit, 4-core host).
+        delta = local_frame(
+            self.spark,
+            _dpid=pa.array(pids, pa.int32()),
+            _dtopic=pa.array(topics, pa.string()),
+            _delta=pa.array(deltas, pa.int64()),
+        ).withColumn("_ts", F.current_timestamp())
+        position = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        off0 = f"_pos + coalesce(_delta, {self._DIVERGED_BASE})"  # offset - 1
+        staged = (
+            src.withColumn("_rid", F.monotonically_increasing_id())
+            .sortWithinPartitions("topic", "_rid")
+            .withColumn("_pos", position)
+            .join(
+                F.broadcast(delta),
+                (F.col("_pid") == F.col("_dpid"))
+                & F.col("topic").eqNullSafe(F.col("_dtopic")),
+                "left",
             )
             .select(
                 "topic",
-                "segment",
-                "offset",
+                F.expr(f"({off0}) div {self.max_segment_entries}").alias("segment"),
+                F.expr(f"{off0} + 1").alias("offset"),
                 "value",
-                F.current_timestamp().alias("ts"),
+                F.col("_ts").alias("ts"),
                 F.xxhash64("value").alias("crc"),
             )
         )
+        return staged, ranges
 
     # ------------------------------------------------------------------
     # read path (O3/O4)

@@ -32,11 +32,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from walrus_spark.log.wal import LOG_SCHEMA, WalrusLog
+from walrus_spark.log.wal import LOG_SCHEMA, WalrusLog, local_frame
 
 
 def read_log_stream(
@@ -78,8 +79,8 @@ def write_log_stream(
     txn_scope = os.path.abspath(checkpoint_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe here: ingest returns before any job on a
+        # replayed txn and commits nothing for an empty batch
         log.ingest(
             batch_df,
             topic_col=topic_col,
@@ -189,8 +190,10 @@ def shared_cursor_stream(
         # → cursor 0 → everything delivers; offsets are 1-based)
         batch_df = raw_df
         if run_cursor:
-            cdf = raw_df.sparkSession.createDataFrame(
-                list(run_cursor.items()), "topic string, cur long"
+            cdf = local_frame(
+                raw_df.sparkSession,
+                topic=pa.array(list(run_cursor), pa.string()),
+                cur=pa.array(list(run_cursor.values()), pa.int64()),
             )
             batch_df = (
                 raw_df.join(F.broadcast(cdf), "topic", "left")
